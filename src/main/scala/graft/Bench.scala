@@ -21,6 +21,35 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `contaminated_passes` as before.
   */
 object Bench {
+  /** The compact summary line is also written here, beside the per-query
+    * detail file, so a consumer need not recover it from captured output. */
+  val SummaryFile = "BENCH_summary.json"
+
+  /** The compact summary line within captured `sbt runMain` output: the
+    * last line that opens a JSON object with "metric", once sbt's
+    * `[info] ` log prefix is stripped. */
+  def summaryLine(output: String): Option[String] =
+    output.linesIterator.map(_.stripPrefix("[info] ").trim)
+      .filter(_.startsWith("{\"metric\"")).toSeq.lastOption
+
+  // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
+  // comma-decimal locale (de, fr, …) would render 3,1416 — invalid JSON
+  private def fmt4(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+
+  /** The compact summary: headline scalars first, then bounded evidence
+    * (one number per pass, at most ten failed names, fp-diff counts), so
+    * the line fits a 2000-char output capture. */
+  private[graft] def compactSummary(total: Double, sfDir: String,
+      nQueries: Int, passes: Int, detailFile: String, subsetJson: String,
+      calibration: Seq[Double], runTotals: Seq[Double], failed: Seq[String],
+      contaminated: Seq[Int], nSkippedSinkWriters: Int,
+      fpCompact: String): String = {
+    def nums(xs: Seq[Double]) = xs.map(fmt4).mkString("[", ",", "]")
+    val failedHead = failed.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","unit":"sec","value":${fmt4(total)},"sf":"$sfDir","n_queries":$nQueries,"passes":$passes,"exec":"full-plan","queries_detail_file":"$detailFile","detail_file":"$detailFile"$subsetJson,"calibration_sec":${nums(calibration)},"run_totals_sec":${nums(runTotals)},"n_failed":${failed.size},"failed_head":$failedHead,"contaminated_passes":${contaminated.mkString("[", ",", "]")},"n_skipped_sink_writers":$nSkippedSinkWriters,"plan_fp_diff":$fpCompact}"""
+  }
+
   /** Fixed CPU-bound probe: ~100M multiply-adds through the same
     * whole-stage-codegen path the real queries use. Identical work every
     * time, no IO, so its per-pass time is a pure host-contention meter. */
@@ -581,10 +610,6 @@ object Bench {
     // LAST — whatever is truncated, the captured tail always ends with
     // metric/value/failed/contaminated. The complete evidence — full
     // precision, every pass — goes to BENCH_local.json next to the build.
-    // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
-    // comma-decimal locale (de, fr, …) would render 3,1416 — invalid JSON
-    def fmt4(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     def r4(v: Double): String = if (v < 0) "-1" else fmt4(v)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + r4(v) }
       .mkString("{", ",", "}")
@@ -703,18 +728,18 @@ object Bench {
     // failure/contamination state, and fp-diff COUNTS. Set
     // SPARK_GRAFT_BENCH_STDOUT_FULL=1 to restore the historical full
     // line (kept for byte-level comparison against old rounds).
+    val compact = compactSummary(total, sfDir, names.size, retained.size,
+      detailFile, subsetJson, retained.map(calib),
+      allPasses.map(p => passData.get(p).map(_.values.sum).getOrElse(0.0)),
+      failed.toSeq, contaminated, sinkWriters.size,
+      s"""{"prev_found":${prevFps.nonEmpty},"same":$fpSame,"new_queries":$fpNew,"changed_n":${fpChanged.size},"strict_changed_n":${fpStrictChanged.size}}""")
+    try java.nio.file.Files.write(
+      java.nio.file.Paths.get(SummaryFile), compact.getBytes("UTF-8"))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $SummaryFile write failed: ${e.getMessage}") }
     if (sys.env.get("SPARK_GRAFT_BENCH_STDOUT_FULL").contains("1"))
       println(s"""{"queries":$qs,$summary}""")
-    else {
-      val failedCompact = failed.take(10).map("\"" + _ + "\"")
-        .mkString("[", ",", "]")
-      val runTotalsCompact = allPasses.map(p => fmt4(
-        passData.getOrElse(p, scala.collection.mutable
-          .Map.empty[String, Double]).values.sum))
-        .mkString("[", ",", "]")
-      val fpCompact = s"""{"prev_found":${prevFps.nonEmpty},"same":$fpSame,"new_queries":$fpNew,"changed_n":${fpChanged.size},"strict_changed_n":${fpStrictChanged.size}}"""
-      println(s"""{"metric":"total","unit":"sec","value":${fmt4(total)},"sf":"$sfDir","n_queries":${names.size},"passes":${retained.size},"exec":"full-plan","queries_detail_file":"$detailFile","detail_file":"$detailFile"$subsetJson,"calibration_sec":$calJson,"run_totals_sec":$runTotalsCompact,"n_failed":${failed.size},"failed_head":$failedCompact,"contaminated_passes":$contamJson,"n_skipped_sink_writers":${sinkWriters.size},"plan_fp_diff":$fpCompact}""")
-    }
+    else println(compact)
     spark.stop()
   }
 }

@@ -168,6 +168,13 @@ final class Browser(
 
   // ---------------------------------------------------------------- public
 
+  /** Cells of a drilldown and, with `includeSummary`, the cell's summary
+    * (reference `sql/browser.py:378-439`). A summary over a drilldown with
+    * no split, window calculator or distinct+sketch mix is one persisted
+    * GROUPING SETS ((dd...), ()) pass (SURVEY §7.4.3) that cells, summary
+    * and `totalCellCount` all read; otherwise one GROUP BY, whose unpaged
+    * cells are persisted for the count when a summary is asked for.
+    * Persisted frames are registered with `Caches` (freed by releaseAll). */
   def aggregate(
       cell: Cell = Cell.empty,
       drilldown: Seq[String] = Nil,
@@ -176,7 +183,7 @@ final class Browser(
       order: Seq[(String, Option[String])] = Nil,
       page: Option[Int] = None,
       pageSize: Option[Int] = None,
-      includeSummary: Boolean = true
+      includeSummary: Boolean = false
   ): AggregationResult = {
     val effCell = restricted(cell)
     val aggs0 = if (aggregates.isEmpty) {
@@ -215,70 +222,81 @@ final class Browser(
     val filtered = cellPredicate(projected, effCell)
       .map(projected.filter).getOrElse(projected)
 
-    val withSplit = split match {
-      case Some(sc) =>
-        val cond = cellPredicate(projected, sc).getOrElse(lit(true))
-        filtered.withColumn(SplitColumn, cond)
-      case None => filtered
-    }
-
-    val groupCols = (if (split.isDefined) Seq(SplitColumn) else Nil) ++ ddRefs
-
-    var result = groupedAgg(withSplit, groupCols, builtinAggs)
-
-    if (excludeNullAggregates && builtinAggs.nonEmpty)
-      result = result.filter(builtinAggs.map(a => bcol(a.name).isNotNull).reduce(_ && _))
-
+    def withoutNulls(df: DataFrame): DataFrame =
+      if (excludeNullAggregates && builtinAggs.nonEmpty)
+        df.filter(builtinAggs.map(a => bcol(a.name).isNotNull).reduce(_ && _))
+      else df
+    def persisted(df: DataFrame): DataFrame = graft.ops.Caches.registerDf(
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // final sort order: split first, then explicit, then natural level order
     // (reference sql/utils.py:106-162, query/browser.py:1010-1024)
     val sortCols = orderColumns(dd, order, split.isDefined)
+    def sorted(df: DataFrame): DataFrame =
+      if (sortCols.nonEmpty) df.orderBy(sortCols: _*) else df
 
-    // window calculators slide along the innermost drilldown item in the
-    // final sort order, partitioned by split + the other drilldown keys
-    // (reference statutils.py:128-139)
-    if (windowAggs.nonEmpty) {
-      require(dd.nonEmpty, "window calculators require a drilldown")
-      // partition by split + every drilldown key except the innermost
-      // item's; slide along the innermost item in natural level order
-      val partKeys = (if (split.isDefined) Seq(SplitColumn) else Nil) ++
-        dd.dropRight(1).flatMap(_.keyRefs)
-      val orderCols = dd.last.levels.map(l => naturalOrderCol(l))
-      val w0 = if (partKeys.isEmpty) Window.partitionBy().orderBy(orderCols: _*)
-      else Window.partitionBy(partKeys.map(bcol): _*).orderBy(orderCols: _*)
-      windowAggs.foreach { a =>
-        val srcName = a.measure.getOrElse(throw new IllegalArgumentException(
-          s"window aggregate '${a.name}' needs a source aggregate in 'measure'"))
-        val n = a.windowSize.getOrElse(1)
-        result = result.withColumn(a.name,
-          WindowCalcs.build(a.function.get, bcol(srcName), n, w0))
+    val (unpaged, summary) =
+      if (includeSummary && dd.nonEmpty && split.isEmpty && windowAggs.isEmpty &&
+          !Browser.mixesDistinctAndSketch(builtinAggs)) {
+        // one shuffle over the fact for both slices (the reference issues
+        // two statements); the grouped result is tiny next to its input
+        val grouped = persisted(
+          cuboidAgg(filtered, ddRefs, builtinAggs, "sets", Seq(ddRefs, Nil)))
+        val fullMask = (1L << ddRefs.size) - 1
+        (sorted(withoutNulls(grouped.filter(col("__gid__") === 0).drop("__gid__"))),
+          Some(grouped.filter(col("__gid__") === fullMask)
+            .drop("__gid__").drop(ddRefs: _*)))
+      } else {
+        val withSplit = split match {
+          case Some(sc) =>
+            val cond = cellPredicate(projected, sc).getOrElse(lit(true))
+            filtered.withColumn(SplitColumn, cond)
+          case None => filtered
+        }
+        val groupCols = (if (split.isDefined) Seq(SplitColumn) else Nil) ++ ddRefs
+        var result = withoutNulls(groupedAgg(withSplit, groupCols, builtinAggs))
+
+        // window calculators slide along the innermost drilldown item in the
+        // final sort order, partitioned by split + the other drilldown keys
+        // (reference statutils.py:128-139)
+        if (windowAggs.nonEmpty) {
+          require(dd.nonEmpty, "window calculators require a drilldown")
+          // partition by split + every drilldown key except the innermost
+          // item's; slide along the innermost item in natural level order
+          val partKeys = (if (split.isDefined) Seq(SplitColumn) else Nil) ++
+            dd.dropRight(1).flatMap(_.keyRefs)
+          val orderCols = dd.last.levels.map(l => naturalOrderCol(l))
+          val w0 = if (partKeys.isEmpty) Window.partitionBy().orderBy(orderCols: _*)
+          else Window.partitionBy(partKeys.map(bcol): _*).orderBy(orderCols: _*)
+          windowAggs.foreach { a =>
+            val srcName = a.measure.getOrElse(throw new IllegalArgumentException(
+              s"window aggregate '${a.name}' needs a source aggregate in 'measure'"))
+            val n = a.windowSize.getOrElse(1)
+            result = result.withColumn(a.name,
+              WindowCalcs.build(a.function.get, bcol(srcName), n, w0))
+          }
+        }
+        // with a summary the cells count too: persisted, the (small,
+        // already aggregated) unpaged frame feeds both without a second
+        // aggregation
+        (if (includeSummary) persisted(sorted(result)) else sorted(result),
+          if (includeSummary && builtinAggs.nonEmpty)
+            Some(groupedAgg(withSplit, Nil, builtinAggs))
+          else None)
       }
-    }
 
-    if (sortCols.nonEmpty) result = result.orderBy(sortCols: _*)
-    val unpaged = result
-    result = paginate(result, page, pageSize)
-
-    val summary =
-      if (includeSummary && builtinAggs.nonEmpty)
-        Some(groupedAgg(withSplit, Nil, builtinAggs))
-      else None
-
-    AggregationResult(result, summary,
+    AggregationResult(paginate(unpaged, page, pageSize), summary,
       dd.map(d => d.dim.name -> d.levelNames).toMap,
       aggregates = aggs.map(_.name),
       attributes = ddRefs,
       cell = effCell,
       hasSplit = split.isDefined,
-      unpagedCells = if (page.isDefined || pageSize.isDefined) Some(unpaged) else None)
+      unpagedCells =
+        if (includeSummary || page.isDefined || pageSize.isDefined) Some(unpaged)
+        else None)
   }
 
-  /** One-pass summary + drilldown: GROUPING SETS ((dd...), ()) computes
-    * both in a single shuffle over the fact (the reference issues two SQL
-    * statements, `sql/browser.py:378-383`; SURVEY §7.4.3 calls for the
-    * fused plan). The grouped result is persisted — it is tiny relative to
-    * the input — so `cells` and `summary` are two cheap reads of one
-    * computation instead of two scans of the fact. Window calculators /
-    * pagination are not supported here; use [[aggregate]] for those. */
+  /** [[aggregate]] with a summary; kept only because the benchmark
+    * harness (`perfbench/InProcess.scala`) still calls it. */
   def aggregateFused(
       cell: Cell = Cell.empty,
       drilldown: Seq[String],
@@ -286,48 +304,8 @@ final class Browser(
       order: Seq[(String, Option[String])] = Nil,
       page: Option[Int] = None,
       pageSize: Option[Int] = None
-  ): AggregationResult = {
-    val effCell = restricted(cell)
-    val aggs = (if (aggregates.isEmpty) cube.aggregates else aggregates.map(cube.aggregate))
-      .filterNot(_.function.exists(WindowCalcs.isWindowFunction))
-    require(aggs.nonEmpty, "aggregateFused needs at least one builtin aggregate")
-    val dd = resolveDrilldown(effCell, drilldown)
-    // same refusal semantics as aggregate(): the server routes eligible
-    // requests here, so the fused path must not silently return wrong
-    // nonadditive sums or unpaginated high-cardinality drilldowns
-    checkHighCardinality(dd, effCell, page, pageSize)
-    checkNonadditive(dd, aggs)
-    val ddRefs = dd.flatMap(_.allRefs)
-    val projected = projectedFrame(
-      (ddRefs ++ aggs.flatMap(aggMeasureRefs) ++ cellRefs(effCell)).distinct)
-    val filtered = cellPredicate(projected, effCell).map(projected.filter).getOrElse(projected)
-
-    val gid = ddRefs.foldLeft(lit(0))((acc, r) => acc * 2 + grouping(bcol(r)))
-      .cast("long").as("__gid__")
-    val aggCols = aggs.map(builtinAggColumn(filtered, _)) :+ gid
-    // persisted so cells + summary share the one grouping-sets pass;
-    // registered with Caches so the consumer's releaseAll frees it (a
-    // long-lived server must not pin one table per call)
-    val grouped = graft.ops.Caches.registerDf(filtered
-      .groupingSets(Seq(ddRefs.map(bcol), Seq.empty), ddRefs.map(bcol): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-    val fullMask = (1L << ddRefs.size) - 1
-    val sortCols = orderColumns(dd, order, hasSplit = false)
-    val cells0 = grouped.filter(col("__gid__") === 0).drop("__gid__")
-    val sorted = if (sortCols.nonEmpty) cells0.orderBy(sortCols: _*) else cells0
-    AggregationResult(
-      paginate(sorted, page, pageSize),
-      Some(grouped.filter(col("__gid__") === fullMask)
-        .drop("__gid__").drop(ddRefs: _*)),
-      dd.map(d => d.dim.name -> d.levelNames).toMap,
-      aggregates = aggs.map(_.name),
-      attributes = ddRefs,
-      cell = effCell,
-      unpagedCells =
-        if (page.isDefined || pageSize.isDefined) Some(sorted) else None)
-  }
+  ): AggregationResult =
+    aggregate(cell, drilldown, aggregates, None, order, page, pageSize, includeSummary = true)
 
   /** Cuboid aggregation (reference enumerates dimension/level combinations
     * driver-side for pre-aggregation, `computation.py:15-70`; Catalyst has
@@ -354,17 +332,7 @@ final class Browser(
       (ddRefs ++ aggs.flatMap(aggMeasureRefs) ++ cellRefs(effCell)).distinct)
     val filtered = cellPredicate(projected, effCell).map(projected.filter).getOrElse(projected)
 
-    val gid = ddRefs.foldLeft(lit(0)) { (acc, r) => acc * 2 + grouping(bcol(r)) }
-      .cast("long").as("__gid__")
-    val aggCols = aggs.map(builtinAggColumn(filtered, _)) :+ gid
-    val grouped = kind match {
-      case "rollup" => filtered.rollup(ddRefs.map(bcol): _*)
-      case "cube"   => filtered.cube(ddRefs.map(bcol): _*)
-      case "sets" =>
-        filtered.groupingSets(sets.map(_.map(bcol)), ddRefs.map(bcol): _*)
-      case other => throw new IllegalArgumentException(s"unknown cuboid kind '$other'")
-    }
-    grouped.agg(aggCols.head, aggCols.tail: _*)
+    cuboidAgg(filtered, ddRefs, aggs, kind, sets)
       .orderBy(col("__gid__").asc +: ddRefs.map(r => bcol(r).asc_nulls_first): _*)
   }
 
@@ -381,8 +349,7 @@ final class Browser(
       k: Int = 10
   ): DataFrame = {
     require(rankDrilldown.nonEmpty, "aggregateTopK needs a rank drilldown")
-    val base = aggregate(cell, groupDrilldown ++ rankDrilldown, aggregates,
-      includeSummary = false).cells
+    val base = aggregate(cell, groupDrilldown ++ rankDrilldown, aggregates).cells
     val effCell = restricted(cell)
     val groupKeys = resolveDrilldown(effCell, groupDrilldown).flatMap(_.keyRefs)
     val rankKeys = resolveDrilldown(effCell, rankDrilldown).flatMap(_.keyRefs)
@@ -480,8 +447,7 @@ final class Browser(
       val itemCell = item.rollup.map(itemCell0.rollup).getOrElse(itemCell0)
       val df = item.kind match {
         case "aggregate" =>
-          aggregate(itemCell, item.drilldown, item.aggregates,
-            includeSummary = false).cells
+          aggregate(itemCell, item.drilldown, item.aggregates).cells
         case "facts"   => facts(itemCell, item.fields)
         case "fact"    => fact(item.key.getOrElse(
           throw new IllegalArgumentException(s"report '$name': fact needs a key")))
@@ -761,6 +727,22 @@ final class Browser(
     }
   }
 
+  /** `aggs` over `frame` grouped by `kind` of `refs` plus `__gid__`, as
+    * [[aggregateCuboids]] describes. */
+  private def cuboidAgg(frame: DataFrame, refs: Seq[String],
+      aggs: Seq[MeasureAggregate], kind: String, sets: Seq[Seq[String]]): DataFrame = {
+    val gid = refs.foldLeft(lit(0))((acc, r) => acc * 2 + grouping(bcol(r)))
+      .cast("long").as("__gid__")
+    val aggCols = aggs.map(builtinAggColumn(frame, _)) :+ gid
+    val grouped = kind match {
+      case "rollup" => frame.rollup(refs.map(bcol): _*)
+      case "cube"   => frame.cube(refs.map(bcol): _*)
+      case "sets"   => frame.groupingSets(sets.map(_.map(bcol)), refs.map(bcol): _*)
+      case other => throw new IllegalArgumentException(s"unknown cuboid kind '$other'")
+    }
+    grouped.agg(aggCols.head, aggCols.tail: _*)
+  }
+
   private def builtinAggColumn(df: DataFrame, agg: MeasureAggregate): Column = {
     val c: Column = agg.expression match {
       case Some(e) =>
@@ -949,9 +931,9 @@ object Browser {
 
   /** True when `aggs` mixes distinct-class with sketch-class aggregates —
     * the combination whose single-pass plan builds one sketch buffer per
-    * DISTINCT VALUE (see `groupedAgg`); callers (the server's fused
-    * routing) must send such requests through the two-pass `aggregate()`
-    * path. */
+    * DISTINCT VALUE (see `groupedAgg`), so `aggregate` never answers it
+    * with the grouping-sets plan. Public because the benchmark harness
+    * (`perfbench/InProcess.scala`) still calls it. */
   def mixesDistinctAndSketch(aggs: Seq[graft.model.MeasureAggregate]): Boolean =
     aggs.exists(isDistinctAgg) && aggs.exists(isSketchAgg)
 }

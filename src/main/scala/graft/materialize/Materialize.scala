@@ -52,7 +52,7 @@ object Materialize {
       if (allCuboids)
         browser.aggregateCuboids(cell, drilldown, aggregates, kind = "cube")
       else
-        browser.aggregate(cell, drilldown, aggregates, includeSummary = false).cells
+        browser.aggregate(cell, drilldown, aggregates).cells
     df.write.mode(SaveMode.Overwrite).parquet(path)
   }
 

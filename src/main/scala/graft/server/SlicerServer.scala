@@ -386,48 +386,13 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
     private def aggregate(name: String, q: Map[String, String],
         id: Option[String]): Resp = {
       val b = workspace.browserFor(id, name)
-      val drilldown = listParam(q, "drilldown")
-      val aggregates = listParam(q, "aggregates")
-      val split = q.get("split").map(s => TimeCuts.parseCell(b.cube, s))
-      val reqCell = cell(name, q) // parsed once: browse + response "cell"
-      // the fused (one grouping-sets pass) plan answers summary + cells +
-      // count from a single scan — eligible whenever there is a plain
-      // builtin-aggregate drilldown (no split, no window calculators)
-      val resolvedAggs = aggregates.map(b.cube.aggregate)
-      val fusible = drilldown.nonEmpty && split.isEmpty && aggregates.nonEmpty &&
-        resolvedAggs.forall(_.function
-          .forall(f => !graft.functions.WindowCalcs.isWindowFunction(f))) &&
-        // mixed distinct + sketch aggregates take the two-pass aggregate()
-        // path (see Browser.groupedAgg) — fused grouping-sets would hit the
-        // per-distinct-value sketch-buffer blowup
-        !graft.browser.Browser.mixesDistinctAndSketch(resolvedAggs)
-      val result0 =
-        if (fusible)
-          b.aggregateFused(reqCell, drilldown, aggregates, order(q),
-            page(q), pageSize(q))
-        else
-          b.aggregate(reqCell, drilldown, aggregates, split,
-            order(q), page(q), pageSize(q))
-      // the default total_cell_count must not re-run the aggregation as a
-      // second job: on the non-fused path persist the (small, already
-      // aggregated) unpaged frame for the request — cells render and the
-      // count both read it; Caches.releaseAll frees it after the response
       val fmt = validatedFormat(q)
-      val wantCount = !q.get("include_cell_count").contains("false") &&
-        fmt == "json"
-      val result =
-        if (fusible || !wantCount) result0
-        else {
-          val persisted = graft.ops.Caches.registerDf(
-            result0.unpagedCells.getOrElse(result0.cells)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          val paged = (page(q), pageSize(q)) match {
-            case (Some(p), Some(n)) => persisted.offset(p * n).limit(n)
-            case (None, Some(n))    => persisted.limit(n)
-            case _                  => persisted
-          }
-          result0.copy(cells = paged, unpagedCells = Some(persisted))
-        }
+      val reqCell = cell(name, q) // parsed once: browse + response "cell"
+      // only the json envelope renders a summary and total_cell_count
+      val result = b.aggregate(reqCell, listParam(q, "drilldown"),
+        listParam(q, "aggregates"),
+        q.get("split").map(s => TimeCuts.parseCell(b.cube, s)),
+        order(q), page(q), pageSize(q), includeSummary = fmt == "json")
       if (fmt == "json_lines") {
         // streamed cells, one JSON object per line (the facts treatment,
         // reference JSONLinesGenerator server/utils.py:105-108): no record

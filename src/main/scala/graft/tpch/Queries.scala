@@ -546,10 +546,11 @@ object Queries {
 
     // fused one-pass summary+drilldown (GROUPING SETS) — cells slice
     "q32_fused_agg" -> ((s, dir) =>
-      b(s, dir).aggregateFused(
+      b(s, dir).aggregate(
         cell = Cell(PointCut("returnflag", Seq("R"))),
         drilldown = Seq("linestatus"),
-        aggregates = Seq("quantity_sum", "fact_count")
+        aggregates = Seq("quantity_sum", "fact_count"),
+        includeSummary = true
       ).cells),
 
     // Streaming-shaped batch: tumbling 1h windows over the events table

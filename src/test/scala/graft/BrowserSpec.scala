@@ -307,10 +307,11 @@ class BrowserSpec extends AnyFunSuite {
       Seq(Dimension.flat("year").copy(cardinality = Some("high"))))
     val hb = new Browser(hc, new StarSchema(hc, factsDf, Map("facts" -> factsDf)), spark)
     assertThrows[IllegalArgumentException] {
-      hb.aggregateFused(drilldown = Seq("year"), aggregates = Seq("amount_sum"))
+      hb.aggregate(drilldown = Seq("year"), aggregates = Seq("amount_sum"),
+        includeSummary = true)
     }
-    hb.aggregateFused(drilldown = Seq("year"), aggregates = Seq("amount_sum"),
-      pageSize = Some(10))
+    hb.aggregate(drilldown = Seq("year"), aggregates = Seq("amount_sum"),
+      pageSize = Some(10), includeSummary = true)
     // nonadditive: sum over a time drilldown refused when enforcement is on
     val base = starCube(JoinMethod.Match)
     val nc = base.copy(
@@ -323,17 +324,59 @@ class BrowserSpec extends AnyFunSuite {
       Map("sales" -> salesDf, "category" -> catDf)), spark,
       enforceNonadditive = true)
     assertThrows[IllegalArgumentException] {
-      nb.aggregateFused(drilldown = Seq("date:year"), aggregates = Seq("qty_sum"))
+      nb.aggregate(drilldown = Seq("date:year"), aggregates = Seq("qty_sum"),
+        includeSummary = true)
     }
   }
 
   test("fused summary+drilldown: one grouping-sets pass, both slices agree") {
-    val r = flatBrowser.aggregateFused(
-      drilldown = Seq("year"), aggregates = Seq("amount_sum", "count"))
+    val r = flatBrowser.aggregate(
+      drilldown = Seq("year"), aggregates = Seq("amount_sum", "count"),
+      includeSummary = true)
     val cells = r.cells.collect()
     assert(cells.length == 4 && cells.forall(_.getAs[Long]("amount_sum") == 15L))
     val s = r.summary.get.collect()(0)
     assert(s.getAs[Long]("amount_sum") == 60L && s.getAs[Long]("count") == 16L)
+  }
+
+  test("grouping-sets plan honours excludeNullAggregates") {
+    val c = starCube(JoinMethod.Detail)
+    val b = new Browser(c, new StarSchema(c, salesDf,
+      Map("sales" -> salesDf, "category" -> catDf)), spark,
+      excludeNullAggregates = true)
+    try {
+      val r = b.aggregate(drilldown = Seq("cat"), aggregates = Seq("qty_sum"),
+        includeSummary = true)
+      // the one-pass plan (an Expand over the grouping sets) answered it
+      assert(r.cells.queryExecution.executedPlan.treeString.contains("Expand"))
+      val names = r.cells.collect().map(_.getAs[String]("cat.name"))
+      // food and tools were sold; unsold toys has a NULL qty_sum
+      assert(names.sorted.toSeq == Seq("food", "tools"))
+      assert(r.totalCellCount == 2L)
+    } finally graft.ops.Caches.releaseAll()
+  }
+
+  test("grouping-sets cells equal the plain plan's; summary sums the unpaged cells") {
+    val b = starBrowser(JoinMethod.Match)
+    def run(summary: Boolean) = b.aggregate(drilldown = Seq("date:month"),
+      aggregates = Seq("qty_sum", "n"), order = Seq("qty_sum" -> Some("desc")),
+      page = Some(1), pageSize = Some(2), includeSummary = summary)
+    try {
+      val plain = run(summary = false)
+      val gs = run(summary = true)
+      assert(plain.summary.isEmpty)
+      // five (year, month) cells by qty desc: 9, 7 | 5, 2 | 1 — page 1
+      val cells = gs.cells.collect().toSeq
+      assert(cells == plain.cells.collect().toSeq)
+      def qty(r: Row) = r.getAs[Number]("qty_sum").doubleValue()
+      assert(cells.map(qty) == Seq(5.0, 2.0))
+      val unpaged = gs.unpagedCells.get.collect()
+      assert(gs.totalCellCount == 5L && plain.totalCellCount == 5L)
+      val s = gs.summary.get.collect().head
+      assert(qty(s) == unpaged.map(qty).sum)
+      assert(s.getAs[Long]("n") == unpaged.map(_.getAs[Long]("n")).sum)
+      assert(qty(s) == 24.0 && s.getAs[Long]("n") == 5L)
+    } finally graft.ops.Caches.releaseAll()
   }
 
   test("join pruning: summary over fact-only measures joins nothing") {

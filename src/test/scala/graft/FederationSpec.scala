@@ -67,7 +67,7 @@ class FederationSpec extends AnyFunSuite {
     val remote = fb.aggregate(drilldown = Seq("returnflag"),
       aggregates = Seq("quantity_sum"))
     val local = localWs.browser("mini").aggregate(drilldown = Seq("returnflag"),
-      aggregates = Seq("quantity_sum"))
+      aggregates = Seq("quantity_sum"), includeSummary = true)
     assert(groupMap(remote.cells, "returnflag", "quantity_sum") ==
       groupMap(local.cells, "returnflag", "quantity_sum"))
     assert(remote.aggregates == Seq("quantity_sum"))
@@ -82,7 +82,7 @@ class FederationSpec extends AnyFunSuite {
     val cut = Cell(PointCut("returnflag", Seq("A")))
     val remoteCut = fb.aggregate(cell = cut, aggregates = Seq("quantity_sum"))
     val localCut = localWs.browser("mini").aggregate(cell = cut,
-      aggregates = Seq("quantity_sum"))
+      aggregates = Seq("quantity_sum"), includeSummary = true)
     val rc = remoteCut.summary.get.collect()(0).getAs[Any]("quantity_sum").toString.toDouble
     val lc = localCut.summary.get.collect()(0).getAs[Any]("quantity_sum").toString.toDouble
     assert(math.abs(rc - lc) < 1e-6)
@@ -204,7 +204,8 @@ class FederationSpec extends AnyFunSuite {
     assert(ws.isFederated("remote.mini"))
     val r = ws.federatedBrowser("remote.mini")
       .aggregate(aggregates = Seq("quantity_sum"))
-    val l = localWs.browser("mini").aggregate(aggregates = Seq("quantity_sum"))
+    val l = localWs.browser("mini").aggregate(aggregates = Seq("quantity_sum"),
+      includeSummary = true)
     val rv = r.summary.get.collect()(0).getAs[Any]("quantity_sum").toString.toDouble
     val lv = l.summary.get.collect()(0).getAs[Any]("quantity_sum").toString.toDouble
     assert(math.abs(rv - lv) < 1e-6)

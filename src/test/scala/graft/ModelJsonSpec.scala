@@ -5,6 +5,14 @@ import graft.model._
 
 class ModelJsonSpec extends AnyFunSuite {
 
+  /** Filesystem path of a hand-written fixture under src/test/resources. */
+  private def fixture(name: String): String =
+    new java.io.File(getClass.getResource(s"/$name").toURI).getPath
+
+  private def readFixture(name: String): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(fixture(name))), "UTF-8")
+
   private val json =
     """{
       |  "dimensions": [
@@ -397,13 +405,11 @@ class ModelJsonSpec extends AnyFunSuite {
           issues.map(_.render).mkString("; "))
     }
 
-    // and the reference's shipped models stay clean under the stricter
-    // sweep (the allowlists must match the schemas, not under-approximate)
-    Seq("/root/reference/doc/files/tutorial_model.json",
-      "/root/reference/examples/hello_world/model.json").foreach { p =>
-      val text = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p)), "UTF-8")
-      assert(!ModelValidator.validateString(text).exists(_.severity == "error"), p)
+    // and tutorial-shaped models stay clean under the stricter sweep
+    // (the allowlists must match the schemas, not under-approximate)
+    Seq("models/tutorial_model.json", "hello_world/model.json").foreach { p =>
+      assert(!ModelValidator.validateString(readFixture(p))
+        .exists(_.severity == "error"), p)
     }
   }
 
@@ -447,10 +453,9 @@ class ModelJsonSpec extends AnyFunSuite {
       i.severity == "error" && i.message.contains("unknown level 'zz'")))
   }
 
-  test("reference doc models load and validate clean (tutorial + hierarchy recipe + date dim)") {
-    // the shipped standalone date dimension parses as a dimension object
-    val dateText = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/examples/date/dim_date.json")), "UTF-8")
+  test("doc-shaped models load and validate clean (tutorial + hierarchy recipe + date dim)") {
+    // a standalone date dimension file parses as a dimension object
+    val dateText = readFixture("models/dim_date.json")
     val dateDim = ModelJson.parseDimension(
       org.json4s.jackson.JsonMethods.parse(dateText)
         .asInstanceOf[org.json4s.JObject])
@@ -458,10 +463,9 @@ class ModelJsonSpec extends AnyFunSuite {
       Seq("year", "quarter", "month", "day", "weekday"))
     assert(dateDim.allHierarchies.map(_.name).contains("ymd"))
 
-    Seq("/root/reference/doc/files/tutorial_model.json",
-      "/root/reference/doc/files/hierarchy_recipe_model.json").foreach { path =>
-      val text = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
+    Seq("models/tutorial_model.json",
+      "models/hierarchy_recipe_model.json").foreach { path =>
+      val text = readFixture(path)
       val cubes = ModelJson.loadString(text)
       assert(cubes.nonEmpty, path)
       val issues = ModelValidator.validateString(text)
@@ -470,13 +474,11 @@ class ModelJsonSpec extends AnyFunSuite {
     }
   }
 
-  test("reference hello_world model loads and validates clean (authentic fixture)") {
-    // the reference's own shipped example (examples/hello_world/model.json):
-    // bare-column mappings (table defaults to the fact), an expression
-    // measure, an expression aggregate, a flat time dimension
-    val path = "/root/reference/examples/hello_world/model.json"
-    val text = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
+  test("hello_world model loads and validates clean") {
+    // the hello_world example shape: bare-column mappings (table defaults
+    // to the fact), an expression measure, an expression aggregate, a
+    // flat time dimension
+    val text = readFixture("hello_world/model.json")
     val cubes = ModelJson.loadString(text)
     assert(cubes.map(_.name) == Seq("irbd_balance"))
     val c = cubes.head
@@ -492,13 +494,13 @@ class ModelJsonSpec extends AnyFunSuite {
       issues.filter(_.severity == "error").map(_.render).mkString("; "))
   }
 
-  test("reference webshop bundle: broken member files are findings, valid parts still validate") {
-    // the reference ships this bundle with two genuinely malformed JSON
-    // members (cube_webvisits.json, dim_date_base.json) — validate must
-    // report BOTH and still reason about the nine parsable files
+  test("webshop bundle: broken member files are findings, valid parts still validate") {
+    // a webshop bundle with two malformed JSON members (cube_webvisits.json
+    // has a trailing comma, dim_date_base.json a missing one) — validate
+    // must report BOTH and still reason about the nine parsable files
+    val bundle = fixture("webshop.cubesmodel")
     val sink = new StringBuilder
-    val code = Slicer.validateModel(
-      "/root/reference/examples/webshop.cubesmodel",
+    val code = Slicer.validateModel(bundle,
       out = s => sink.append(s).append('\n'))
     val out = sink.toString
     assert(code == 1)
@@ -509,8 +511,7 @@ class ModelJsonSpec extends AnyFunSuite {
     // CASCADE: date_sale/date_visit template the (malformed, skipped)
     // date_base, and the validator reports that dangling template rather
     // than silently losing the dimensions
-    val (metadata, readIssues) = ModelBundle.readLenient(
-      "/root/reference/examples/webshop.cubesmodel")
+    val (metadata, readIssues) = ModelBundle.readLenient(bundle)
     assert(readIssues.size == 2)
     val issues = ModelValidator.validate(metadata)
     assert(issues.exists(i => i.severity == "error" &&
@@ -524,6 +525,10 @@ class ModelJsonSpec extends AnyFunSuite {
       case _ => Nil
     }
     assert(dimNames.contains("product") && !dimNames.contains("date_base"))
+    // model.json + one cube + seven dimensions: nine parsable members
+    assert(dimNames.sorted == Seq("browser", "country", "customer",
+      "date_sale", "date_visit", "newsletter", "product"))
+    assert((metadata \ "cubes").children.map(_ \ "name") == List(JString("sales")))
   }
 
   test("lenient bundle read reports duplicate-name members instead of silently dropping them") {

@@ -183,8 +183,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("fused aggregate: summary + cells share ONE shuffle (grouping sets)") {
-    val r = b.aggregateFused(drilldown = Seq("returnflag"),
-      aggregates = Seq("quantity_sum", "fact_count"))
+    val r = b.aggregate(drilldown = Seq("returnflag"),
+      aggregates = Seq("quantity_sum", "fact_count"), includeSummary = true)
     try {
       val plan = physicalPlan(r.cells)
       // one hash shuffle (the grouping-sets aggregation); the only other

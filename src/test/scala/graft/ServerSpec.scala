@@ -167,6 +167,55 @@ class ServerSpec extends AnyFunSuite {
     assert(body.linesIterator.size == 4) // header + 3 flags
   }
 
+  test("total_cell_count is the unpaged cell count on the split and grouping-sets plans") {
+    import org.json4s._
+    def cellsAndCount(path: String): (List[JValue], BigInt) = {
+      val (code, body) = get(path)
+      assert(code == 200, body)
+      val json = org.json4s.jackson.JsonMethods.parse(body)
+      val JInt(n) = json \ "total_cell_count"
+      ((json \ "cells").children, n)
+    }
+    // a split request takes the plain plan; the other is grouping-sets
+    // eligible (summary + drilldown, no split, builtin aggregates)
+    Seq("/cube/sales/aggregate?drilldown=customer:nation" +
+        "&aggregates=fact_count&split=returnflag:R",
+      "/cube/sales/aggregate?drilldown=customer:nation" +
+        "&aggregates=quantity_sum%7Cfact_count").foreach { base =>
+      val (all, n) = cellsAndCount(base)
+      assert(all.nonEmpty && n == all.size, base)
+      val (page, m) = cellsAndCount(s"$base&pagesize=3&page=1")
+      assert(page.size == 3 && m == all.size, base)
+    }
+  }
+
+  test("csv rows of a grouping-sets eligible aggregate equal its json cells") {
+    import org.json4s._
+    val base = "/cube/sales/aggregate?drilldown=customer:nation" +
+      "&aggregates=quantity_sum%7Cfact_count&order=quantity_sum:desc&pagesize=3&page=1"
+    val (jcode, jbody) = get(base)
+    val (ccode, cbody) = get(s"$base&format=csv&header=names")
+    assert(jcode == 200 && ccode == 200, s"$jbody\n$cbody")
+    val header +: rows = cbody.linesIterator.toSeq
+    val cols = header.split(",").toSeq
+    val cells = (org.json4s.jackson.JsonMethods.parse(jbody) \ "cells").children
+    assert(rows.size == 3 && cells.size == 3)
+    def value(v: JValue): String = v match {
+      case JString(x)  => x
+      case JInt(x)     => x.toString
+      case JDouble(x)  => BigDecimal(x).bigDecimal.stripTrailingZeros.toPlainString
+      case JDecimal(x) => x.bigDecimal.stripTrailingZeros.toPlainString
+      case other       => other.toString
+    }
+    def norm(x: String): String =
+      scala.util.Try(BigDecimal(x).bigDecimal.stripTrailingZeros.toPlainString)
+        .getOrElse(x)
+    rows.zip(cells).foreach { case (row, cell) =>
+      assert(row.split(",").toSeq.map(norm) == cols.map(c => norm(value(cell \ c))),
+        s"$row vs $cell")
+    }
+  }
+
   test("csv header types: names, labels (default), none (reference header_type)") {
     val base = "/cube/sales/aggregate?drilldown=returnflag&aggregates=fact_count&format=csv"
     val (_, names) = get(s"$base&header=names")
