@@ -28,13 +28,9 @@ import graft.materialize.Materialize
   * stopping at the first, and exits 1 iff errors were found. */
 object Slicer {
 
-  private def sparkSession(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private def sparkSession(): SparkSession = Sessions.builder(
+    sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+    sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32")).getOrCreate()
 
   def main(args: Array[String]): Unit = args.toList match {
     case "serve" :: config :: rest =>

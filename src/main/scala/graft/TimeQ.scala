@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev timing harness for individual catalog queries — the quick A/B
   * loop [[Bench]] is too heavy for (it runs the full catalog, 3+
   * passes). Same measurement discipline as Bench: `toRdd.count()` so
@@ -54,29 +52,11 @@ object TimeQ {
     val names = args(1).split(",").toSeq
     val iters = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // r13: sort writer for small-R no-agg shuffles (see Bench.scala —
-      // bypass-merge writes R files per map task, pathological on this
-      // filesystem; scale-neutral since production R > 200)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"))
-      // r13: the JVM-wide whole-stage-codegen class cache defaults to 100
-      // entries — a 387-query catalog (and per-round literal variants in
-      // the iterative ops) thrashes it, so executor tasks re-run Janino
-      // per stage (thread dumps showed workers pinned in
-      // UnitCompiler.compile; q359 task time 58→17 s with the raise).
-      // ~10k entries covers the catalog across bench passes; class
-      // metadata cost is ~100-250 MB, fine for any long-lived executor.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
+    val spark = Sessions.local(cpus)
       // dev A/B knob only (TimeQ is not the bench): TIMEQ_AQE=false
       // isolates AQE stage-materialization latency from DAG scheduling
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("TIMEQ_AQE", "true"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val meter = new Meter

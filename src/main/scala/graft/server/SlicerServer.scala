@@ -25,7 +25,10 @@ import graft.cells.{Cell, CutParser}
 final class SlicerServer(workspace: Workspace, port: Int = 0,
     /** Response cache TTL in seconds; 0 disables (reference
       * `server/caching.py` — TTL'd response cache keyed by the request).
-      * Cache hits carry an `X-Graft-Cache: hit` header. */
+      * The key is the parsed request: route path, identity and decoded
+      * query parameters, so spellings that differ only in parameter order
+      * or percent-encoding share one entry. Cache hits carry an
+      * `X-Graft-Cache: hit` header. */
     cacheTtlSeconds: Int = 0,
     cacheMaxEntries: Int = 1024,
     /** Bind address; loopback by default, `[server] host` in slicer.ini. */
@@ -73,20 +76,20 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
 
   // --------------------------------------------------------- response cache
 
-  /** Bounded TTL'd LRU of rendered GET responses. Key includes the
-    * identity — authorization must never leak across identities through
-    * the cache. Driver-side memory only (responses are already bounded by
-    * the 10k-row formatter limits). */
+  import SlicerServer.CacheKey
+
+  /** Bounded TTL'd LRU of rendered GET responses, keyed by [[CacheKey]].
+    * Driver-side memory only (responses are already bounded by the
+    * 10k-row formatter limits). */
   private final case class CacheEntry(resp: Resp, expiresAtMs: Long)
   private val responseCache =
-    new java.util.LinkedHashMap[String, CacheEntry](64, 0.75f, true) {
+    new java.util.LinkedHashMap[CacheKey, CacheEntry](64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, CacheEntry]): Boolean =
+          e: java.util.Map.Entry[CacheKey, CacheEntry]): Boolean =
         size() > cacheMaxEntries
     }
 
-  private def cached(key: String)(compute: => Resp): (Resp, Boolean) = {
-    if (cacheTtlSeconds <= 0) return (compute, false)
+  private def cached(key: CacheKey)(compute: => Resp): (Resp, Boolean) = {
     val now = System.currentTimeMillis()
     responseCache.synchronized {
       val hit = responseCache.get(key)
@@ -150,13 +153,12 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
           case None    => identityOf(ex, q)
         }
         // a GET /report carries its spec in the BODY (reference allows
-        // both verbs), which the URL-keyed response cache cannot see —
-        // two different report bodies would collide on one cache entry
+        // both verbs), which the response cache's key (path, identity,
+        // query parameters) cannot see — two different report bodies
+        // would collide on one cache entry
         val bodyCarrying = parts.lastOption.contains("report")
-        if (ex.getRequestMethod == "GET" && !bodyCarrying) {
-          val key = s"$path?${Option(ex.getRequestURI.getRawQuery).getOrElse("")}" +
-            s"@${id.getOrElse("")}"
-          val (resp, hit) = cached(key)(route(ex, parts, q, id))
+        if (cacheTtlSeconds > 0 && ex.getRequestMethod == "GET" && !bodyCarrying) {
+          val (resp, hit) = cached(CacheKey(path, id, q))(route(ex, parts, q, id))
           if (hit) ex.getResponseHeaders.set("X-Graft-Cache", "hit")
           respond(ex, resp)
         } else respond(ex, route(ex, parts, q, id))
@@ -850,4 +852,16 @@ final class SlicerServer(workspace: Workspace, port: Int = 0,
       }
     }
   }
+}
+
+object SlicerServer {
+  /** Response-cache key: exactly what `route` reads of a GET — the
+    * stripped path, the identity, and the decoded query parameters. A
+    * structured value, not a concatenated string: no decoded value can
+    * spell another request's key, and no identity can be spelled by a
+    * query (authorization must never leak across identities through the
+    * cache). `params` is `parseQuery`'s `Map`, whose equality and hash do
+    * not depend on the order the parameters arrived in. */
+  private final case class CacheKey(path: String, id: Option[String],
+      params: Map[String, String])
 }

@@ -115,14 +115,22 @@ class ConcurrencySpec extends AnyFunSuite {
     val client = HttpClient.newHttpClient()
     val pool = Executors.newFixedThreadPool(8)
     try {
-      def fetch(url: String): (Int, String) = {
+      def fetch(url: String): (Int, String, Boolean) = {
         val r = client.send(
           HttpRequest.newBuilder(URI.create(url)).GET().build(),
           HttpResponse.BodyHandlers.ofString())
-        (r.statusCode(), r.body())
+        (r.statusCode(), r.body(),
+          r.headers().firstValue("X-Graft-Cache").orElse("") == "hit")
       }
       val urlA = s"http://127.0.0.1:$port/cube/sales/aggregate?drilldown=returnflag&aggregates=quantity_sum"
       val urlB = s"http://127.0.0.1:$port/cube/sales/aggregate?drilldown=customer:region&aggregates=fact_count"
+      // equivalent spellings share the canonical cache entry: permuted
+      // parameters, and for B a percent-encoded `:`
+      val spellsA = Seq(urlA,
+        s"http://127.0.0.1:$port/cube/sales/aggregate?aggregates=quantity_sum&drilldown=returnflag")
+      val spellsB = Seq(urlB,
+        s"http://127.0.0.1:$port/cube/sales/aggregate?aggregates=fact_count&drilldown=customer:region",
+        s"http://127.0.0.1:$port/cube/sales/aggregate?aggregates=fact_count&drilldown=customer%3Aregion")
       // canonical bodies fetched single-threaded before the storm
       val canonA = fetch(urlA)._2
       val canonB = fetch(urlB)._2
@@ -133,12 +141,18 @@ class ConcurrencySpec extends AnyFunSuite {
           override def call(): Try[Int] = Try {
             var n = 0
             while (System.currentTimeMillis() < deadline) {
-              // alternate queries and identities so cache keys collide
-              // only when they must: same path+query+identity
-              val base = if (n % 2 == 0) urlA else urlB
+              // alternate queries, spellings and identities so cache keys
+              // collide only when they must: same path, identity and
+              // decoded parameters
+              val spells = if (n % 2 == 0) spellsA else spellsB
+              val base = spells((n / 2 + i) % spells.size)
               val url = if (i % 2 == 0) base else s"$base&identity=user$i"
-              val (code, body) = fetch(url)
+              val (code, body, hit) = fetch(url)
               require(code == 200, s"status $code: $body")
+              // thread i alone sends identity user$i, so its first A and
+              // first B can only miss: a hit is another identity's entry
+              require(!(i % 2 == 1 && n < 2 && hit),
+                s"response for $url was served from another identity's entry")
               val expected = if (n % 2 == 0) canonA else canonB
               // a corrupted or cross-wired cache entry surfaces here: the
               // body must be byte-identical to the single-threaded result

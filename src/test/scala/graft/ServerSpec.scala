@@ -463,6 +463,75 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  private def isHit(r: HttpResponse[String]): Boolean =
+    r.headers().firstValue("X-Graft-Cache").orElse("") == "hit"
+
+  private def salesWorkspace(): Workspace = new Workspace(spark)
+    .registerCube(TpchModel.cube).registerTableDir("/root/testdata/sf0.001")
+
+  test("response cache: equivalent spellings share one entry; a changed value does not") {
+    val srv = new SlicerServer(salesWorkspace(), cacheTtlSeconds = 60)
+    val p = srv.start()
+    try {
+      def get(path: String) = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p$path")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      val agg = "/cube/sales/aggregate"
+      val first = get(s"$agg?drilldown=returnflag%7Clinestatus" +
+        "&aggregates=fact_count%7Cquantity_sum&cut=shipdate:1995")
+      assert(first.statusCode() == 200 && !isHit(first), first.body())
+      // the same parameters in another order
+      val permuted = get(s"$agg?cut=shipdate:1995" +
+        "&aggregates=fact_count%7Cquantity_sum&drilldown=returnflag%7Clinestatus")
+      assert(isHit(permuted) && permuted.body() == first.body())
+      // permuted again, `|` spelled `%7c` and `:` spelled `%3A` (a literal
+      // `|` is not a legal URI character, so the server never sees one)
+      val respelled = get(s"$agg?aggregates=fact_count%7cquantity_sum" +
+        "&cut=shipdate%3A1995&drilldown=returnflag%7clinestatus")
+      assert(isHit(respelled) && respelled.body() == first.body())
+      // one value changed: a different request, computed afresh
+      val changed = get(s"$agg?drilldown=returnflag%7Clinestatus" +
+        "&aggregates=fact_count%7Cquantity_sum&cut=shipdate:1996")
+      assert(changed.statusCode() == 200 && !isHit(changed))
+      assert(changed.body() != first.body())
+      // decoded values that concatenate alike are different requests:
+      // `b=c%26cut%3D…` is one parameter `b`, not a cut
+      val cutReq = get(s"$agg?drilldown=returnflag&aggregates=fact_count" +
+        "&cut=linestatus:F&b=c")
+      val folded = get(s"$agg?drilldown=returnflag&aggregates=fact_count" +
+        "&b=c%26cut%3Dlinestatus:F")
+      assert(cutReq.statusCode() == 200 && folded.statusCode() == 200)
+      assert(!isHit(cutReq) && !isHit(folded))
+      assert(!cutReq.body().contains("\"cell\": []") &&
+        folded.body().contains("\"cell\": []"), s"${cutReq.body()}\n${folded.body()}")
+    } finally srv.stop()
+  }
+
+  test("response cache: a query value ending in '@' never spells another identity's entry") {
+    import graft.auth._
+    // "y@alice" sees everything; alice sees ASIA only
+    val ws = salesWorkspace().setAuthorizer(new SimpleAuthorizer(rights = Map(
+      "y@alice" -> AccessRight(),
+      "alice" -> AccessRight(
+        cellRestrictions = Map("sales" -> Seq("customer:ASIA"))))))
+    val srv = new SlicerServer(ws, cacheTtlSeconds = 60)
+    val p = srv.start()
+    try {
+      def get(path: String, bearer: String) = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p$path"))
+          .header("Authorization", s"Bearer $bearer").GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      val u = "/cube/sales/aggregate?drilldown=customer:region&x="
+      // a key of the form path?rawQuery@identity reads the same for both:
+      // ...&x=@y@alice
+      val wide = get(u, "y@alice")
+      assert(wide.statusCode() == 200 && wide.body().contains("AMERICA"))
+      val narrow = get(s"${u}@y", "alice")
+      assert(narrow.statusCode() == 200 && !isHit(narrow))
+      assert(!narrow.body().contains("AMERICA") && narrow.body().contains("ASIA"))
+    } finally srv.stop()
+  }
+
   test("auth: limited attributes vanish from facts, fact-by-key, and the model") {
     val (c1, facts) = aget("/cube/sales/facts?pagesize=2&identity=dave")
     assert(c1 == 200)
